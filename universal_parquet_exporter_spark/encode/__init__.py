@@ -9,6 +9,9 @@ Layers:
 - :mod:`.pipeline` — the distributed job: size-aware partition planning,
   ``mapInArrow`` encode, Parquet sink, lineage/metrics, checkpointed
   resume, and the decode (read-back) path;
+- :mod:`.scan` — the one read planner (committed manifest → unit and
+  zone-map pruning) and chunk decode kernel, shared by ``decode_dataset``
+  and the ``upe_encoded`` readers;
 - :mod:`.maintenance` — vacuum sweep for dead payload files and orphan
   manifest rows (the Iceberg ``remove_orphan_files`` analog);
 - :mod:`.compaction` — rewrite fragmented units into full-size chunks

@@ -337,7 +337,7 @@ def q_compact_filtered(spark, sf_dir: str):
 
     from pyspark.sql import functions as F
 
-    from .pipeline import EncodeJobConfig, decode_dataset, encode_job, manifest_dir
+    from .pipeline import EncodeJobConfig, decode_dataset, encode_job
 
     out = tempfile.mkdtemp(prefix="upes_cmpf_")
     # zero-padded key: lexicographic unit order == numeric id order, so
@@ -364,22 +364,12 @@ def q_compact_filtered(spark, sf_dir: str):
     if not rep["units_compacted"] or rep["slices_after"] >= rep["slices_before"]:
         raise RuntimeError(f"compaction merged nothing: {rep}")
 
-    # pruning evidence on the REWRITTEN manifest, as one aggregation row
-    bound = "00000300"
-    mx = F.get_json_object(F.col("stats"), "$.doc_id[1]")
-    ev = (
-        spark.read.parquet(manifest_dir(out))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((mx.isNull() | (mx >= bound)).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"post-compact zone maps pruned nothing ({ev.qualifying}/{ev.total} qualify)"
-        )
-    dec = decode_dataset(spark, out, filters=[("doc_id", ">=", bound)])
+    # pruning evidence on the REWRITTEN manifest: the key bound prunes
+    # units, then chunks inside the rest
+    ev: dict = {}
+    dec = decode_dataset(spark, out, filters=[("doc_id", ">=", "00000300")], pruning_evidence=ev)
+    if ev["units_qualifying"] >= ev["units_total"] and ev["qualifying"] >= ev["total"] > 1:
+        raise RuntimeError(f"post-compact pruning pruned nothing ({ev})")
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang", "source", "n_chars"
     )

@@ -115,8 +115,9 @@ def _chunk_stats(tbl: pa.Table) -> str:
     - long string minima are TRUNCATED (a prefix is still a valid lower
       bound); long string maxima are dropped (truncating a max would
       understate it and prune chunks that match — the parquet pitfall);
-    - float columns containing NaN record no bounds (NaN breaks total
-      order);
+    - float columns containing NaN record no bounds (Spark orders NaN
+      above every double, and ``pc.min_max`` skips it, so a recorded
+      maximum would wrongly prune ``> x`` terms);
     - timestamps record exact epoch-µs ints, dates epoch-days ints,
       decimals exact decimal STRINGS (an unscaled int can overflow int64
       at precision 38; the pruning side re-types them from the probed
@@ -152,8 +153,6 @@ def _chunk_stats(tbl: pa.Table) -> str:
     a chunk with no ``_nc`` at all (pre-feature data, or a dataset with
     a real column named ``_n``/``_nc``, which suppresses both reserved
     keys) never prunes on null counts."""
-    import math
-
     import pyarrow.compute as pc
 
     stats: dict[str, list] = {}
@@ -194,6 +193,8 @@ def _chunk_stats(tbl: pa.Table) -> str:
             # tax on the hot encode path for bounds that never prune.
             # Keys/ids/enum-ish columns (avg value <= cap) keep stats.
             continue
+        if pa.types.is_floating(t) and pc.any(pc.is_nan(col)).as_py():
+            continue
         mm = pc.min_max(col)
         if is_ts:
             mn = _ts_scalar_us(mm["min"], t.unit)
@@ -209,8 +210,6 @@ def _chunk_stats(tbl: pa.Table) -> str:
         else:
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
         if mn is None or mx is None:
-            continue
-        if pa.types.is_floating(t) and (math.isnan(mn) or math.isnan(mx)):
             continue
         if is_str:
             mn = mn[:_STATS_STR_MAX]
@@ -1270,11 +1269,13 @@ _FILTER_OPS = (
     "<", "<=", ">", ">=", "=", "==", "!=", "<>", "in", "not_in",
     "is_null", "not_null", "startswith", "endswith", "contains",
 )
+_OP_ALIASES = {"==": "=", "<>": "!="}
 
 
 def _filter_groups(filters) -> list[list[tuple]]:
     """Normalize ``filters`` to OR-of-AND groups (pyarrow's DNF
-    convention): a flat list of ``(col, op, value)`` TUPLES is one
+    convention) of terms with canonical ops (``==``/``<>`` become
+    ``=``/``!=``): a flat list of ``(col, op, value)`` TUPLES is one
     conjunction; a list of LISTS is a disjunction of conjunctions.
     A tuple element is a term, a list element is a group — mixing the
     two shapes is ambiguous and raises."""
@@ -1288,15 +1289,24 @@ def _filter_groups(filters) -> list[list[tuple]]:
             "filters must be all (col, op, value) terms (AND) or all "
             "lists of terms (OR of ANDs), not a mix"
         )
+    out = []
     for g in groups:
         if not g:
             raise ValueError("empty AND-group in filters")
+        terms = []
         for t in g:
             if not (isinstance(t, tuple) and len(t) == 3):
                 raise ValueError(
                     f"filter term must be a (col, op, value) tuple: {t!r}"
                 )
-    return groups
+            c, op, v = t
+            if op not in _FILTER_OPS:
+                raise ValueError(f"unsupported filter op {op!r} (use one of {_FILTER_OPS})")
+            if op in ("in", "not_in") and not v:
+                raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
+            terms.append((c, _OP_ALIASES.get(op, op), v))
+        out.append(terms)
+    return out
 
 
 def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
@@ -1308,8 +1318,7 @@ def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
     bound needs prefix-successor arithmetic the unit pruner doesn't
     require), and a string IN-list contributes its [min, max].
     Non-string operands never contribute (the key domain is string).
-    Shared by the ``upe_encoded`` reader's pushFilters path and
-    :func:`decode_dataset`'s filter-driven unit pruning."""
+    The unit-pruning layer of :func:`.scan.plan_scan`."""
     lo = hi = None
     for col, op, v in terms:
         if col != key_col:
@@ -1323,9 +1332,9 @@ def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
             continue
         if not isinstance(v, str):
             continue
-        if op in (">", ">=", "=", "=="):
+        if op in (">", ">=", "="):
             lo = v if lo is None or v > lo else lo
-        if op in ("<", "<=", "=", "=="):
+        if op in ("<", "<=", "="):
             hi = v if hi is None or v < hi else hi
         if op == "startswith":
             lo = v if lo is None or v > lo else lo
@@ -1356,84 +1365,19 @@ def _json_path_safe(name: str) -> bool:
     return bool(_JSON_PATH_SAFE.match(name))
 
 
-def _zone_bound_type(ftype: pa.DataType):
-    """(spark cast type, value converter) for comparing a filter value
-    against this column's recorded zone-map bounds: timestamps/dates
-    become exact epoch ints, decimals re-type both sides to the column's
-    own decimal (bounds are stored as exact strings — unscaled ints can
-    overflow int64 at precision 38), ints/floats cast so comparisons
-    stay in the right domain, strings compare lexicographically."""
-    if pa.types.is_integer(ftype):
-        return "long", lambda v: v
+def _zone_bound_cast(ftype: pa.DataType) -> str | None:
+    """Spark type the recorded zone-map bounds of a column cast to for
+    typed aggregation: timestamps/dates are stored as exact epoch ints,
+    decimals as exact strings re-typed to the column's own decimal
+    (unscaled ints can overflow int64 at precision 38); None for strings,
+    which compare lexicographically as stored."""
+    if pa.types.is_integer(ftype) or pa.types.is_timestamp(ftype) or pa.types.is_date(ftype):
+        return "long"
     if pa.types.is_floating(ftype):
-        return "double", lambda v: v
-    if pa.types.is_timestamp(ftype):
-        return "long", ts_value_us
-    if pa.types.is_date(ftype):
-        return "long", date_value_days
+        return "double"
     if pa.types.is_decimal(ftype):
-        from decimal import Decimal
-
-        return f"decimal({ftype.precision},{ftype.scale})", lambda v: Decimal(str(v))
-    return None, lambda v: v
-
-
-def _dv_array_col(c: str, ftype: pa.DataType, cast_to: str | None):
-    """Spark Column parsing the stats ``_dv.<c>`` JSON array into the
-    column's zone-map domain for ``array_contains`` membership, or None
-    when this type records no distinct sets (floats).  Stored domains:
-    ints for integer/timestamp/date (parse as array<bigint>), exact
-    strings for decimal (parse as array<string>, transform-cast to the
-    column's own decimal so '1.50' == 1.5), raw strings otherwise."""
-    from pyspark.sql import functions as F
-
-    if pa.types.is_floating(ftype):
-        return None
-    if pa.types.is_decimal(ftype):
-        return F.expr(
-            f"transform(from_json(get_json_object(stats, '$._dv.{c}'), "
-            f"'array<string>'), x -> cast(x AS {cast_to}))"
-        )
-    if cast_to == "long":
-        return F.from_json(
-            F.get_json_object(F.col("stats"), f"$._dv.{c}"), "array<bigint>"
-        )
-    return F.from_json(
-        F.get_json_object(F.col("stats"), f"$._dv.{c}"), "array<string>"
-    )
-
-
-def unit_id_ranges(units) -> list[tuple[int, int]]:
-    """Collapse a unit-id list into inclusive contiguous ``(lo, hi)``
-    ranges.  :func:`..plans.partitioning.units_for_key_range` returns a
-    contiguous id span by construction (units are ordered by key range),
-    so this is almost always ONE range — the point is that the pruning
-    predicate stays O(ranges) literals, not O(units): at 10^12 docs /
-    64 MB units an ``isin`` over ~10^6 ids would be a multi-megabyte
-    expression tree Catalyst re-evaluates per manifest row."""
-    ranges: list[list[int]] = []
-    for u in sorted(set(int(x) for x in units)):
-        if ranges and u == ranges[-1][1] + 1:
-            ranges[-1][1] = u
-        else:
-            ranges.append([u, u])
-    return [(a, b) for a, b in ranges]
-
-
-def _units_condition(units):
-    """Manifest-row predicate for a unit-id set, as OR-of-BETWEEN over
-    the collapsed contiguous ranges (false literal for an empty set)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    ranges = unit_id_ranges(units)
-    if not ranges:
-        return F.lit(False)
-    return reduce(
-        lambda a, b: a | b,
-        [F.col("unit").between(lo, hi) for lo, hi in ranges],
-    )
+        return f"decimal({ftype.precision},{ftype.scale})"
+    return None
 
 
 def _union_probe_schema(payload_dir: str, probes: list[tuple[str, int]]) -> pa.Schema:
@@ -1539,355 +1483,90 @@ def decode_dataset(
     lineage commit are silently skipped (their units were re-encoded by
     the resuming run).
 
-    ``key_range=(lo, hi)`` (inclusive, None = unbounded) prunes the scan
-    to the encode units whose range boundaries can contain such keys
-    (:func:`..plans.partitioning.units_for_key_range`) — pruned units'
-    payload bytes are never read, the engine's partition-pruning analog
-    — then applies the exact full-precision filter on the decoded key
-    column.  With ``columns``, the key column must be included (the
-    residual filter needs it).
+    ``key_range=(lo, hi)`` (inclusive, None = unbounded) reads only the
+    encode units whose range boundaries can contain such keys
+    (:func:`..plans.partitioning.units_for_key_range`), then applies the
+    exact filter on the decoded key column.  With ``columns``, the key
+    column must be included.
 
-    ``filters=[(col, op, value), ...]`` (op in ``< <= > >= = == != <>
-    in not_in is_null not_null startswith endswith contains``, terms
-    AND-ed; ``endswith``/``contains`` (string columns) have no order
-    relation to bounds and prune through the exact distinct-value sets
-    only, mirroring the reader's ``StringEndsWith``/``StringContains``
-    pushdown; ``in`` /
-    ``not_in`` take a non-empty tuple/list; ``in`` prunes when no
-    listed value fits the bounds; ``!=``/``not_in`` prune only through
-    the distinct-value sets — a chunk whose recorded (exact, non-null)
-    value set is a SUBSET of the rejected values matches nothing —
-    plus the all-null rejection every comparison gets, because bounds
-    can never prove inequality; ``startswith`` (string columns) prunes when no value in
-    [min, max] can carry the prefix — the url-prefix scan shape —
-    and on distinct-value-set membership when recorded;
-    ``is_null``/``not_null`` ignore the value and prune on the recorded
-    per-chunk null counts — an all-null chunk, including one whose
-    generation predates the column under additive evolution, is also
-    skipped for every null-rejecting comparison term) prunes CHUNKS by
-    the per-chunk min/max zone maps the encoder
-    records in the manifest (:func:`_chunk_stats` — the parquet
-    row-group-statistics analog, orthogonal to key_range's unit
-    pruning): a chunk whose recorded bounds cannot satisfy a term is
-    skipped before any payload byte is read, a null/absent bound never
-    prunes, and the exact predicate is re-applied to the decoded rows.
-    Filter columns must be included in ``columns`` when both are given;
-    datasets encoded before zone maps existed decode fine (no stats
-    column → no pruning).
+    ``filters=[(col, op, value), ...]`` takes ops from :data:`_FILTER_OPS`
+    (``==``/``<>`` are ``=``/``!=``; ``in``/``not_in`` take a non-empty
+    list; ``startswith``/``endswith``/``contains`` a string on a string
+    column; ``is_null``/``not_null`` ignore the value).  A flat list is
+    one AND-group; a list of LISTS is an OR of AND-groups (pyarrow's
+    DNF).  The read is planned by :func:`.scan.plan_scan`: key-column
+    terms prune encode units, and per-chunk zone maps
+    (:func:`_chunk_stats`) prune chunks by the rule in
+    :func:`.scan._chunk_keep`.  Pruning is conservative; the exact
+    predicate is re-applied to the decoded rows.  Filter columns must be
+    included in ``columns`` when both are given.
 
-    Disjunctions use pyarrow's DNF shape: a list of LISTS of terms is
-    an OR of AND-groups (``[[("lang", "=", "de")], [("lang", "=",
-    "fr")]]``; the flat list stays one conjunction).  A chunk is
-    pruned only when EVERY group's recorded stats disqualify it — a
-    group containing any unprunable term keeps all chunks,
-    conservatively disabling pruning for the whole disjunction — and
-    the exact OR-of-AND predicate is re-applied to decoded rows.  The
-    out-of-range-key scan (``key < a OR key >= b``) and the
-    multi-category scan are the intended shapes.
+    ``pruning_evidence``, when a dict, receives the planner's funnel at
+    no Spark-job cost: ``total``/``qualifying`` are the manifest rows
+    before/after chunk pruning (with ``filters``), and ``units_total``/
+    ``units_qualifying`` the encode units before/after unit pruning
+    (when every AND-group bounds the key column).
 
-    Terms on the PLAN's key column additionally prune whole encode
-    UNITS (each group's implied key range via
-    :func:`key_range_from_terms`, unioned across the disjunction) —
-    the same layer an explicit ``key_range`` drives, fired before any
-    chunk statistics are consulted; with ``pruning_evidence`` the
-    unit-level counts ship as ``units_total``/``units_qualifying``.
+    Schema evolution (additive): the output schema is the union-by-name
+    over all chunk generations, generations that predate a column read
+    back as nulls, and a column whose TYPE differs between generations
+    raises a schema-conflict error rather than casting silently."""
+    from .scan import _chunk_runs, _ChunkScanPartition, _read_chunk_partition, plan_scan
 
-    Schema evolution (additive): appends may add or omit columns — the
-    output schema is the union-by-name over all chunk generations
-    (meta-only probes), and generations that predate a column read back
-    as nulls; a column whose TYPE differs between generations raises a
-    schema-conflict error rather than casting silently."""
-    from pyspark.sql import functions as F
-
-    payload_dir = os.path.join(output_dir, "payload")
-    enc, has_stats = _committed_manifest_df(spark, output_dir)
-    # committed-but-unpruned view, captured BEFORE any key-range unit
-    # filter: the schema probe must (a) survive a range that prunes every
-    # unit (typed empty result) and (b) never land on an orphan manifest
-    # row — after vacuum(rewrite_manifest=False), the documented
-    # object-store mode, orphan rows outlive their deleted payload files
-    # and a raw-manifest probe would raise FileNotFoundError
-    enc_committed = enc
-    key_col = None
-    if key_range is not None:
-        from ..plans.partitioning import units_for_key_range
-
-        plan = _load_plan(output_dir)
-        if plan is None:
-            raise ValueError(f"no plan.json under {output_dir} for key-range pruning")
-        key_col = plan.key_col
-        if columns is not None and key_col not in columns:
-            raise ValueError(
-                f"key_range pruning needs the key column '{key_col}' in columns"
-            )
-        units = units_for_key_range(plan, key_range[0], key_range[1])
-        enc = enc.where(_units_condition(units))
-
-    # filter-driven UNIT pruning: terms on the plan's key column imply a
-    # key range per DNF group; the union of each group's qualifying
-    # units is a conservative superset of where matches can live (the
-    # same algebra as the upe_encoded reader's pushFilters path),
-    # applied before any chunk statistics are consulted.  A group whose
-    # key terms leave both bounds open keeps every unit, disabling this
-    # layer for the whole disjunction; datasets without a plan skip it.
-    fgroups = _filter_groups(filters) if filters else []
-    if fgroups:
-        fplan = _load_plan(output_dir)
-        if fplan is not None:
-            from ..plans.partitioning import units_for_key_range
-
-            funits: set | None = set()
-            for g in fgroups:
-                f_lo, f_hi = key_range_from_terms(g, fplan.key_col)
-                if f_lo is None and f_hi is None:
-                    funits = None
-                    break
-                funits.update(units_for_key_range(fplan, f_lo, f_hi))
-            if funits is not None:
-                if pruning_evidence is not None:
-                    pruning_evidence["units_total"] = int(sum(fplan.salts))
-                    pruning_evidence["units_qualifying"] = len(funits)
-                enc = enc.where(_units_condition(sorted(funits)))
-
-    # one meta-only probe per distinct column-name set (derived from the
-    # manifest's own codecs maps — no payload read), unioned by name:
-    # schema evolution means different chunk generations may carry
-    # different column sets, and a single-chunk probe would miss columns
-    probe_rows = _probe_rows(enc_committed)
-    if not probe_rows:
-        raise ValueError("empty encoded dataset")
-    probe = _union_probe_schema(payload_dir, [(r.file, r.offset) for r in probe_rows])
+    groups = _filter_groups(filters) if filters else []
+    scan = plan_scan(output_dir, groups, key_range)
+    probe = scan.schema
+    if key_range is not None and columns is not None and scan.plan.key_col not in columns:
+        raise ValueError(
+            f"key_range pruning needs the key column '{scan.plan.key_col}' in columns"
+        )
     if columns:
         missing = [c for c in columns if c not in probe.names]
         if missing:
             raise ValueError(f"columns not in dataset: {missing}")
-    out_schema = _arrow_to_ddl(probe, columns)
-    want_fields = [probe.field(c) for c in columns] if columns else list(probe)
+    for c, op, v in (t for g in groups for t in g):
+        if c not in probe.names:
+            raise ValueError(f"filter column {c!r} not in dataset schema")
+        if op in ("startswith", "endswith", "contains") and not (
+            isinstance(v, str)
+            and (pa.types.is_string(probe.field(c).type) or pa.types.is_large_string(probe.field(c).type))
+        ):
+            raise ValueError(f"{op} needs a string value on a string column ({c!r})")
+        if columns is not None and c not in columns:
+            raise ValueError(f"filters need column {c!r} in columns (residual filter)")
+    if pruning_evidence is not None:
+        pruning_evidence.update(scan.funnel)
 
-    if filters:
-        for c, op, _v in (t for g in fgroups for t in g):
-            if op not in _FILTER_OPS:
-                raise ValueError(f"unsupported filter op {op!r} (use one of {_FILTER_OPS})")
-            if op in ("in", "not_in") and not _v:
-                raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
-            if c not in probe.names:
-                raise ValueError(f"filter column {c!r} not in dataset schema")
-            if op in ("startswith", "endswith", "contains") and not (
-                isinstance(_v, str)
-                and (
-                    pa.types.is_string(probe.field(c).type)
-                    or pa.types.is_large_string(probe.field(c).type)
-                )
-            ):
-                raise ValueError(
-                    f"{op} needs a string value on a string column ({c!r})"
-                )
-            if columns is not None and c not in columns:
-                raise ValueError(f"filters need column {c!r} in columns (residual filter)")
-        if has_stats:
-            # zone-map chunk pruning: keep a chunk unless its recorded
-            # bounds PROVE the term can't match; null/absent bounds keep.
-            # Bounds are typed from the probed schema so integer
-            # comparisons stay exact (no double round-trip past 2^53).
-            ncj = F.get_json_object(F.col("stats"), "$._nc")
-            n_total = F.get_json_object(F.col("stats"), "$._n").cast("long")
-            has_nc = ncj.isNotNull() & n_total.isNotNull()
-
-            def _term_keep(c, op, v):
-                if not _json_path_safe(c):
-                    # a dotted/bracketed name breaks the get_json_object
-                    # path and a failed _nc lookup would read as
-                    # all-null and WRONGLY prune — skip manifest pruning
-                    # for this column (the exact residual still applies)
-                    return None
-                # null-count pruning (the parquet null-count analog):
-                # a column absent from a recorded _nc map is all-null in
-                # that chunk — including generations that PREDATE the
-                # column under additive evolution
-                nc = F.get_json_object(F.col("stats"), f"$._nc.{c}").cast("long")
-                not_all_null = (~has_nc) | (nc.isNotNull() & (nc < n_total))
-                if op in ("is_null", "not_null"):
-                    if op == "is_null":
-                        term = (~has_nc) | nc.isNull() | (nc > F.lit(0))
-                    else:
-                        term = not_all_null
-                    return F.col("stats").isNull() | term
-                cast_to, conv = _zone_bound_type(probe.field(c).type)
-                vs = [conv(x) for x in v] if op in ("in", "not_in") else [conv(v)]
-                mn = F.get_json_object(F.col("stats"), f"$.{c}[0]")
-                mx = F.get_json_object(F.col("stats"), f"$.{c}[1]")
-                if cast_to:
-                    mn, mx = mn.cast(cast_to), mx.cast(cast_to)
-                if op == "startswith":
-                    # every match is >= the prefix itself, and the min's
-                    # length-prefix can't exceed it (the same algebra as
-                    # the DataSource reader's _chunk_keep)
-                    lit = F.lit(vs[0])
-                    term = (mx.isNull() | (mx >= lit)) & (
-                        mn.isNull() | (F.substring(mn, 1, len(vs[0])) <= lit)
-                    )
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        member = F.exists(dv_arr, lambda x: x.startswith(vs[0]))
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                elif op in ("endswith", "contains"):
-                    # no order relation to [min, max] — membership in
-                    # the exact distinct-value set is the only pruner
-                    # (plus the shared all-null rejection below)
-                    term = F.lit(True)
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        if op == "endswith":
-                            member = F.exists(dv_arr, lambda x: x.endswith(vs[0]))
-                        else:
-                            member = F.exists(dv_arr, lambda x: x.contains(vs[0]))
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                elif op in (">", ">="):
-                    lit = F.lit(vs[0])
-                    cmpc = mx > lit if op == ">" else mx >= lit
-                    term = mx.isNull() | cmpc
-                elif op in ("<", "<="):
-                    lit = F.lit(vs[0])
-                    cmpc = mn < lit if op == "<" else mn <= lit
-                    term = mn.isNull() | cmpc
-                elif op in ("!=", "<>", "not_in"):
-                    # bounds can never prove inequality (the mn==mx==v
-                    # constant chunk records dv={v} anyway), so prune
-                    # purely on the distinct-value set: the chunk matches
-                    # nothing when every recorded non-null value is
-                    # rejected.  Absent set → keep; all-null rejection
-                    # comes from the shared null-rejecting tail below.
-                    term = F.lit(True)
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        # factory, not default-args: F.exists introspects
-                        # the lambda's arity and passes one Column per
-                        # PARAMETER, so extra params would become lambda
-                        # variables
-                        def _make_survives(_vs, _cast):
-                            def _survives(e):
-                                t = None
-                                for x in _vs:
-                                    litx = F.lit(x)
-                                    if _cast and _cast.startswith("decimal"):
-                                        litx = litx.cast(_cast)
-                                    cmpx = e != litx
-                                    t = cmpx if t is None else (t & cmpx)
-                                return t
-
-                            return _survives
-
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = dvj.isNull() | F.exists(
-                            dv_arr, _make_survives(vs, cast_to)
-                        )
-                else:  # = / == / in: any listed value inside [mn, mx]
-                    term = None
-                    for x in vs:
-                        lit = F.lit(x)
-                        t = (mn.isNull() | (mn <= lit)) & (mx.isNull() | (mx >= lit))
-                        term = t if term is None else (term | t)
-                    # distinct-value set: when the chunk recorded its
-                    # exact values (≤ _STATS_DV_MAX), equality prunes on
-                    # MEMBERSHIP — the interleaved-categorical case
-                    # bounds can never exclude.  Absent set → keep.
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        member = None
-                        for x in vs:
-                            litx = F.lit(x)
-                            if cast_to and cast_to.startswith("decimal"):
-                                litx = litx.cast(cast_to)
-                            m = F.array_contains(dv_arr, litx)
-                            member = m if member is None else (member | m)
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                # comparison/equality terms are null-rejecting: an
-                # all-null chunk (evolution: column-predating chunks
-                # included) can never satisfy them
-                term = term & not_all_null
-                return F.col("stats").isNull() | term
-
-            # OR-of-AND composition (pyarrow DNF): a chunk survives when
-            # ANY group's prunable terms all keep it.  A group with no
-            # prunable term keeps every chunk, which conservatively
-            # disables pruning for the whole disjunction.
-            any_prunable = False
-            keep = None
-            for g in fgroups:
-                gk = None
-                for c, op, v in g:
-                    t = _term_keep(c, op, v)
-                    if t is not None:
-                        any_prunable = True
-                        gk = t if gk is None else (gk & t)
-                gk = F.lit(True) if gk is None else gk
-                keep = gk if keep is None else (keep | gk)
-            if any_prunable:
-                if pruning_evidence is not None:
-                    # opt-in pruning audit (two tiny manifest-only jobs):
-                    # chunk rows qualifying before/after the zone-map
-                    # keep — the EXPLAIN analog for a filtered decode
-                    pruning_evidence["total"] = enc.count()
-                enc = enc.where(keep)
-                if pruning_evidence is not None:
-                    pruning_evidence["qualifying"] = enc.count()
+    payload_dir = os.path.join(output_dir, "payload")
+    fields = [probe.field(c) for c in columns] if columns else list(probe)
 
     def decode(iterator):
-        # several manifest rows (unit-slices) share one chunk; the input
-        # is sorted by (file, offset) within the partition, so a
-        # one-chunk cache deserializes each chunk exactly once
-        handles: dict[str, object] = {}
-        cur_key = None
-        cur_tbl = None
-        try:
-            for batch in iterator:
-                cols = [batch.column(i).to_pylist() for i in range(5)]
-                for fname, off, ln, roff, nr in zip(*cols):
-                    if (fname, off) != cur_key:
-                        fh = handles.get(fname)
-                        if fh is None:
-                            fh = handles[fname] = _open_payload(payload_dir, fname)
-                        fh.seek(off)
-                        # column pruning happens INSIDE the container:
-                        # excluded columns' buffers are skipped, never
-                        # decompressed; columns a chunk generation
-                        # predates are null-padded from the union schema
-                        cur_tbl = _pad_table(
-                            deserialize_chunk(fh.read(ln), columns, missing_ok=True),
-                            want_fields,
-                        )
-                        cur_key = (fname, off)
-                    for b in cur_tbl.slice(roff, nr).to_batches():
-                        if b.num_rows:
-                            yield _normalize_batch(b)
-        finally:
-            for fh in handles.values():
-                fh.close()
+        # the repartition below sends every slice of a chunk to one task
+        batches = list(iterator)
+        if batches:
+            chunks = _chunk_runs(pa.Table.from_batches(batches))
+            yield from _read_chunk_partition(_ChunkScanPartition(payload_dir, columns, chunks, fields))
 
-    # the manifest is tiny (hundreds of rows in small files), so the scan
-    # coalesces to ~1 partition; spread chunk workloads across the
-    # cluster, keeping all slices of a chunk together (hash by chunk id)
-    # so the one-chunk cache still gets a hit per slice
-    par = spark.sparkContext.defaultParallelism
+    # the kept manifest rows are tiny, so they ship from the driver as a
+    # local relation (no Spark job); hashing by chunk spreads the decode
+    # over the cluster and keeps all slices of a chunk in one task
+    slices = scan.rows.select(["file", "offset", "length", "row_off", "n_rows"])
     out = (
-        enc.select("file", "offset", "length", "row_off", "n_rows")
-        .repartition(par, "file", "offset")
-        .sortWithinPartitions("file", "offset", "row_off")
-        .mapInArrow(decode, out_schema)
+        spark.createDataFrame(slices)
+        .repartition(spark.sparkContext.defaultParallelism, "file", "offset")
+        .mapInArrow(decode, _arrow_to_ddl(probe, columns))
     )
     if key_range is not None:
         # exact residual on the full-precision key (unit pruning is a
         # conservative prefix-range superset)
+        key_col = scan.plan.key_col
         lo, hi = key_range
         if lo is not None:
             out = out.where(_exact_col(key_col) >= lo)
         if hi is not None:
             out = out.where(_exact_col(key_col) <= hi)
-    if filters:
-        # exact residual for every term (chunk pruning is conservative;
+    if groups:
+        # exact residual for every term (pruning is conservative;
         # _exact_col keeps a dotted name from parsing as a struct path),
         # AND-ed within a group, OR-ed across groups
         def _term_expr(c, op, v):
@@ -1895,10 +1574,9 @@ def decode_dataset(
             if op == "in":
                 return col.isin(*v)
             if op == "not_in":
-                # SQL NOT IN: null rows never match (same as the chunk
-                # pruner's null-rejecting algebra)
+                # SQL NOT IN: null rows never match
                 return ~col.isin(*v)
-            if op in ("!=", "<>"):
+            if op == "!=":
                 return col != v
             if op == "is_null":
                 return col.isNull()
@@ -1915,7 +1593,7 @@ def decode_dataset(
             }.get(op, col == v)
 
         cond = None
-        for g in fgroups:
+        for g in groups:
             gc = None
             for c, op, v in g:
                 e = _term_expr(c, op, v)
@@ -1926,11 +1604,11 @@ def decode_dataset(
 
 
 def _committed_manifest_df(spark, output_dir: str):
-    """``(enc, has_stats)`` — the committed manifest view shared by
-    :func:`decode_dataset` and :func:`dataset_column_stats`: manifest
-    fragment rows semi-joined to lineage ``status='ok'`` on
-    ``(unit, run_id)``, so orphans from a run that crashed between its
-    data and lineage commits are invisible to every reader."""
+    """``(enc, has_stats)`` — the committed manifest as a DataFrame, for
+    :func:`dataset_column_stats`: manifest fragment rows semi-joined to
+    lineage ``status='ok'`` on ``(unit, run_id)``, so orphans from a run
+    that crashed between its data and lineage commits are invisible
+    (the pyarrow twin that plans reads is :func:`.scan._committed_manifest`)."""
     from pyspark.sql import functions as F
 
     raw = spark.read.parquet(manifest_dir(output_dir))
@@ -2015,7 +1693,7 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
     safe_cols = [c for c in cols if _json_path_safe(c)]
     for c in safe_cols:
         ftype = probe.field(c).type
-        cast_to, _ = _zone_bound_type(ftype)
+        cast_to = _zone_bound_cast(ftype)
         is_str = cast_to is None
         mnj = F.get_json_object(F.col("stats"), f"$.{c}[0]")
         mxj = F.get_json_object(F.col("stats"), f"$.{c}[1]")
@@ -2313,21 +1991,11 @@ def q_decode_filters(spark, sf_dir: str):
         "doc_id", F.col("doc_id").cast("string")
     )
     encode_job(spark, df, cfg)
-    # pruning evidence as ONE aggregation row — never a full-manifest
-    # collect (a null max bound qualifies: unbounded never prunes)
-    mx = F.get_json_object(F.col("stats"), "$.doc_id[1]")
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((mx.isNull() | (mx >= "5")).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"zone maps pruned nothing ({ev.qualifying}/{ev.total} chunks qualify)"
-        )
+    # evidence: the key bound prunes units, then chunks inside the rest
+    ev: dict = {}
+    decode_dataset(spark, out, filters=[("doc_id", ">=", "5")], pruning_evidence=ev)
+    if ev["units_qualifying"] >= ev["units_total"] and ev["qualifying"] >= ev["total"] > 1:
+        raise RuntimeError(f"key-bound pruning pruned nothing ({ev})")
     dec = decode_dataset(
         spark, out, filters=[("doc_id", ">=", "5"), ("n_chars", ">=", 200)]
     )
@@ -2359,20 +2027,12 @@ def q_decode_filters_dv(spark, sf_dir: str):
         "doc_id", F.col("doc_id").cast("string")
     )
     encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: no chunk's recorded set holds 'eo'
-    dvj = F.get_json_object(F.col("stats"), "$._dv.lang")
-    member = F.array_contains(F.from_json(dvj, "array<string>"), F.lit("eo"))
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((dvj.isNull() | member).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
+    # evidence: no chunk's recorded set holds 'eo'
+    ev: dict = {}
+    decode_dataset(spark, out, filters=[("lang", "=", "eo")], pruning_evidence=ev)
+    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
         raise RuntimeError(
-            f"distinct-value sets pruned nothing ({ev.qualifying}/{ev.total})"
+            f"distinct-value sets pruned nothing ({ev['qualifying']}/{ev['total']})"
         )
     dec = decode_dataset(spark, out, filters=[("lang", "in", ["de", "eo"])])
     return dec.select(
@@ -2409,25 +2069,14 @@ def q_decode_filters_ne(spark, sf_dir: str):
         target_unit_bytes=64 << 10, chunk_rows=128,
     )
     encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: some chunk's recorded value set
-    # holds nothing but the rejected 'en' — disqualified for != 'en'
-    dvj = F.get_json_object(F.col("stats"), "$._dv.cat")
-    survivor = F.exists(
-        F.from_json(dvj, "array<string>"), lambda x: x != F.lit("en")
-    )
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((dvj.isNull() | survivor).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
+    # evidence: some chunk's recorded value set holds nothing but the
+    # rejected 'en' — disqualified for != 'en'
+    ev: dict = {}
+    dec = decode_dataset(spark, out, filters=[("cat", "!=", "en")], pruning_evidence=ev)
+    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
         raise RuntimeError(
-            f"inequality pruned nothing ({ev.qualifying}/{ev.total})"
+            f"inequality pruned nothing ({ev['qualifying']}/{ev['total']})"
         )
-    dec = decode_dataset(spark, out, filters=[("cat", "!=", "en")])
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"), "cat", "n_chars"
     )
@@ -2501,24 +2150,16 @@ def q_decode_filters_null(spark, sf_dir: str):
         target_unit_bytes=64 << 10, chunk_rows=128,
     )
     encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: some chunk is all-null in
-    # opt_lang (nc == _n), i.e. disqualified for IS NOT NULL
-    nc = F.get_json_object(F.col("stats"), "$._nc.opt_lang").cast("long")
-    n_total = F.get_json_object(F.col("stats"), "$._n").cast("long")
-    survives = nc.isNotNull() & (nc < n_total)
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum(survives.cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
+    # evidence: some chunk is all-null in opt_lang (nc == _n), i.e.
+    # disqualified for IS NOT NULL
+    ev: dict = {}
+    dec = decode_dataset(
+        spark, out, filters=[("opt_lang", "not_null", None)], pruning_evidence=ev
     )
-    if ev.total > 1 and ev.qualifying >= ev.total:
+    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
         raise RuntimeError(
-            f"null counts pruned nothing ({ev.qualifying}/{ev.total})"
+            f"null counts pruned nothing ({ev['qualifying']}/{ev['total']})"
         )
-    dec = decode_dataset(spark, out, filters=[("opt_lang", "not_null", None)])
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"), "opt_lang", "n_chars"
     )
@@ -2547,28 +2188,14 @@ def q_decode_filters_prefix(spark, sf_dir: str):
         target_unit_bytes=64 << 10, chunk_rows=128,
     )
     encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: most chunks' key bounds exclude
-    # the prefix '0000012' (doc_ids 120-129)
-    mn = F.get_json_object(F.col("stats"), "$.doc_key[0]")
-    mx = F.get_json_object(F.col("stats"), "$.doc_key[1]")
-    pfx = F.lit("0000012")
-    survives = (
-        (mx.isNull() | (mx >= pfx))
-        & (mn.isNull() | (F.substring(mn, 1, 7) <= pfx))
+    # evidence: units and chunks outside the prefix '0000012' (doc_ids
+    # 120-129) are skipped
+    ev: dict = {}
+    dec = decode_dataset(
+        spark, out, filters=[("doc_key", "startswith", "0000012")], pruning_evidence=ev
     )
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum(survives.cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"prefix bounds pruned nothing ({ev.qualifying}/{ev.total})"
-        )
-    dec = decode_dataset(spark, out, filters=[("doc_key", "startswith", "0000012")])
+    if ev["units_qualifying"] >= ev["units_total"] and ev["qualifying"] >= ev["total"] > 1:
+        raise RuntimeError(f"prefix bounds pruned nothing ({ev})")
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
     )
@@ -2642,22 +2269,14 @@ def q_decode_filters_ts(spark, sf_dir: str):
     encode_job(spark, df, cfg)
     lo = datetime(2024, 1, 8)
     hi = datetime(2024, 1, 15)
-    # pruning evidence as ONE aggregation row (no manifest collect):
-    # a chunk survives iff its recorded [min,max] epoch-µs window can
-    # intersect [lo, hi]; null bounds keep (unbounded never prunes)
-    mn = F.get_json_object(F.col("stats"), "$.ts[0]").cast("long")
-    mx = F.get_json_object(F.col("stats"), "$.ts[1]").cast("long")
-    qual = (mx.isNull() | (mx >= ts_value_us(lo))) & (mn.isNull() | (mn <= ts_value_us(hi)))
-    ev = (
-        spark.read.parquet(manifest_dir(out))
-        .agg(F.count("*").alias("total"), F.sum(qual.cast("long")).alias("qualifying"))
-        .collect()[0]
+    ev: dict = {}
+    dec = decode_dataset(
+        spark, out, filters=[("ts", ">=", lo), ("ts", "<=", hi)], pruning_evidence=ev
     )
-    if ev.total > 1 and ev.qualifying >= ev.total:
+    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
         raise RuntimeError(
-            f"timestamp zone maps pruned nothing ({ev.qualifying}/{ev.total} chunks qualify)"
+            f"timestamp zone maps pruned nothing ({ev['qualifying']}/{ev['total']} chunks qualify)"
         )
-    dec = decode_dataset(spark, out, filters=[("ts", ">=", lo), ("ts", "<=", hi)])
     # µs epoch ints: identical across engines regardless of how each
     # stringifies timestamps (same convention as events_agg); doubles
     # rounded to 2dp like every other raw-double query column
