@@ -180,3 +180,41 @@ def test_cluster_by_categorical_collapses_distinct_sets(spark, webpages, outdir)
     exp = webpages.where(F.col("lang") == "de").count()
     assert dec.count() == exp
     assert ev["qualifying"] < ev["total"] * 0.5
+
+
+def test_cluster_order_keeps_units_major_beside_a_column_named___unit__():
+    """A user cluster column named ``__unit__`` must not replace the
+    unit sort key: rows stay unit-major, cluster column ascending
+    inside each unit."""
+    import numpy as np
+    import pyarrow as pa
+
+    from universal_parquet_exporter_spark.encode.pipeline import _cluster_order
+
+    units = np.array([2, 0, 1, 0, 2, 1], dtype=np.int64)
+    batch = pa.record_batch({"__unit__": pa.array([0, 5, 4, 3, 1, 2])})
+    order = _cluster_order(units, batch, ("__unit__",))
+    assert units[order].tolist() == [0, 0, 1, 1, 2, 2]
+    assert batch.column("__unit__").take(pa.array(order)).to_pylist() == [3, 5, 2, 4, 0, 1]
+
+
+def test_cluster_by_lists_strip_whitespace(tmp_path, monkeypatch):
+    """``"lang, warc_ts"`` names two columns in both the environment
+    config and the ``upe_encoded`` writer option."""
+    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+
+    from universal_parquet_exporter_spark.encode.pipeline import _persist_plan
+    from universal_parquet_exporter_spark.plans.partitioning import EncodePlan
+    from universal_parquet_exporter_spark.sources.spark_datasource import _EncodedBatchWriter
+
+    monkeypatch.setenv("UPES_ENCODE_OUTPUT_DIR", str(tmp_path))
+    monkeypatch.setenv("UPES_ENCODE_CLUSTER_BY", " lang , warc_ts ,")
+    assert EncodeJobConfig.from_environment().cluster_by == ("lang", "warc_ts")
+
+    _persist_plan(EncodePlan("url", [], [1]), str(tmp_path))
+    schema = StructType(
+        [StructField(c, StringType()) for c in ("url", "lang")]
+        + [StructField("warc_ts", TimestampType())]
+    )
+    opts = {"path": str(tmp_path), "key_col": "url", "cluster_by": "lang, warc_ts"}
+    assert _EncodedBatchWriter(opts, schema, overwrite=False).cluster_cols == ("lang", "warc_ts")

@@ -85,6 +85,23 @@ def test_read_jdbc_rejects_bad_args():
         read_jdbc(_FakeSpark(), "jdbc:mysql://h/d", table="t", partition_column="id")
 
 
+def test_read_jdbc_rejects_query_with_partition_column():
+    # Spark's JDBC source refuses `query` with `partitionColumn` only at
+    # load time; the shim refuses it before building a reader
+    spark = _FakeSpark()
+    with pytest.raises(ValueError, match="partition_column"):
+        read_jdbc(
+            spark,
+            "jdbc:mysql://h/d",
+            query="SELECT id FROM t",
+            partition_column="id",
+            lower_bound=0,
+            upper_bound=100,
+            num_partitions=4,
+        )
+    assert not spark.read.loaded and spark.read.fmt is None
+
+
 def test_encode_config_from_environment(monkeypatch):
     monkeypatch.setenv("UPES_ENCODE_OUTPUT_DIR", "/data/out")
     monkeypatch.setenv("UPES_ENCODE_KEY_COL", "page_url")

@@ -24,17 +24,18 @@ Scale notes (100 TB / 1000-executor thinking):
   nominal scale a consolidate-per-unit exchange is pure network cost on
   already-compressed bytes;
 - payload I/O resolves through ``pyarrow.fs`` for ``hdfs://``/``s3://``
-  output dirs (same storage as the Spark-written manifests); plain paths
+  output dirs (same storage as the manifests); plain paths
   use POSIX I/O and require a driver+executor shared mount, and payload
   files are fsync'd before their manifest rows are emitted;
-- unit atomicity without a shuffle: the manifest parquet commit is
-  job-atomic (FileOutputCommitter), lineage rows are derived from the
-  committed manifest and appended after, and decode semi-joins fragments
-  against lineage on (unit, run_id) — a run that crashes between payload
-  writes / manifest commit / lineage commit leaves only dead payload
-  files or orphan manifest rows, which are never read, and a resume
-  re-encodes those units under a new run_id (GC of dead files is the
-  usual Iceberg maintenance sweep);
+- unit atomicity without a shuffle: the encode stage's manifest rows
+  come back to the driver, which commits them as ONE manifest file and
+  then ONE lineage file, each a single-file temp-write + rename
+  (:func:`_commit_fragments` — no Spark job), and decode semi-joins
+  fragments against lineage on (unit, run_id) — a run that crashes
+  between payload writes / manifest file / lineage file leaves only dead
+  payload files or orphan manifest rows, which are never read, and a
+  resume re-encodes those units under a new run_id (GC of dead files is
+  the usual Iceberg maintenance sweep);
 - payload files hold our codec output verbatim — sizes are honest and
   decode never pays a double-decompress;
 - decode prunes to requested columns before deserializing payloads.
@@ -62,11 +63,50 @@ from .container import deserialize_chunk, serialize_chunk
 # sized for codec throughput) is decoupled from the bookkeeping
 # granularity (unit, sized for resume/lineage), so fragment size no
 # longer shrinks with task parallelism.  Iceberg-style: tasks write data
-# files straight to storage, Spark commits only the manifest.
+# files straight to storage, the driver commits only the manifest.
 FRAG_SCHEMA = (
     "unit long, first_key string, n_rows long, row_off long, bytes_in long, "
     "bytes_out long, wall_ms double, codecs string, file string, offset long, length long, "
     "stats string, native boolean"
+)
+
+# committed metadata files (:func:`_commit_fragments`): plain int64/
+# double/utf8/µs-UTC columns, which Spark reads interchangeably with its
+# own parquet files
+_MANIFEST_PA_SCHEMA = pa.schema(
+    [
+        ("unit", pa.int64()),
+        ("first_key", pa.string()),
+        ("n_rows", pa.int64()),
+        ("row_off", pa.int64()),
+        ("bytes_in", pa.int64()),
+        ("bytes_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        ("codecs", pa.string()),
+        ("file", pa.string()),
+        ("offset", pa.int64()),
+        ("length", pa.int64()),
+        ("stats", pa.string()),
+        ("native", pa.bool_()),
+        ("run_id", pa.string()),
+    ]
+)
+
+_LINEAGE_PA_SCHEMA = pa.schema(
+    [
+        ("unit", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("bytes_in", pa.int64()),
+        ("bytes_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        ("n_fragments", pa.int64()),
+        ("codecs", pa.string()),
+        ("run_id", pa.string()),
+        ("status", pa.string()),
+        ("batch_tag", pa.string()),
+        ("committed_at", pa.timestamp("us", "UTC")),
+        ("native", pa.bool_()),
+    ]
 )
 
 _STATS_STR_MAX = 64  # string bound length cap (see _chunk_stats)
@@ -413,10 +453,14 @@ class EncodeJobConfig:
             max_buffer_bytes=int(env.get("UPES_ENCODE_MAX_BUFFER_BYTES", 256 << 20)),
             map_tasks=int(map_tasks) if map_tasks else None,
             input_format=env.get("UPES_ENCODE_INPUT_FORMAT", "parquet"),
-            cluster_by=tuple(
-                c for c in env.get("UPES_ENCODE_CLUSTER_BY", "").split(",") if c
-            ),
+            cluster_by=_column_list(env.get("UPES_ENCODE_CLUSTER_BY", "")),
         )
+
+
+def _column_list(spec: str) -> tuple:
+    """``"a, b"`` → ``("a", "b")``: a comma-separated column option,
+    whitespace around each name stripped, empty names dropped."""
+    return tuple(c.strip() for c in spec.split(",") if c.strip())
 
 
 def _plan_path(output_dir: str) -> str:
@@ -539,13 +583,55 @@ def next_manifest_name(output_dir: str) -> str:
     return f"data_v{top + 1}"
 
 
-def _dir_exists(path: str) -> bool:
-    fs, p = _payload_fs(path)
-    if fs is None:
-        return os.path.isdir(p)
-    from pyarrow.fs import FileType
+def _read_meta_table(path: str, columns: list[str]) -> pa.Table | None:
+    """A metadata parquet directory (manifest or lineage) as one Arrow
+    table (``_SUCCESS`` markers and ``.``-prefixed temp files ignored by
+    pyarrow.dataset's default ``ignore_prefixes``); None when the
+    directory doesn't exist yet."""
+    import pyarrow.dataset as pads
 
-    return fs.get_file_info(p).type == FileType.Directory
+    try:
+        dset = pads.dataset(path, format="parquet")
+    except (FileNotFoundError, OSError):
+        return None
+    names = [c for c in columns if c in dset.schema.names]
+    return dset.to_table(columns=names)
+
+
+def _ok_lineage(output_dir: str, columns: list[str]) -> pa.Table | None:
+    """Committed (``status='ok'``) lineage rows, read with pyarrow; None
+    before the first commit."""
+    import pyarrow.compute as pc
+
+    lin = _read_meta_table(os.path.join(output_dir, "lineage"), columns + ["status"])
+    if lin is None or "status" not in lin.schema.names:
+        return None
+    return lin.filter(pc.equal(lin.column("status"), "ok"))
+
+
+def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
+    """One parquet file into a metadata directory, atomically: a temp
+    name prefixed ``.`` (invisible to Spark/pyarrow listings), fsync'd
+    on POSIX paths, then renamed — a reader never sees a torn footer,
+    and the name never points at bytes still in the page cache (the
+    payload writer's rule)."""
+    import pyarrow.parquet as pq
+
+    fs, root = _payload_fs(dir_path)
+    if fs is None:
+        os.makedirs(root, exist_ok=True)
+        tmp = os.path.join(root, f".tmp-{name}")
+        with open(tmp, "wb") as f:
+            pq.write_table(tbl, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(root, name))
+    else:
+        fs.create_dir(root, recursive=True)
+        tmp = f"{root}/.tmp-{name}"
+        with fs.open_output_stream(tmp) as out:
+            pq.write_table(tbl, out)
+        fs.move(tmp, f"{root}/{name}")
 
 
 def load_or_build_plan(df, cfg: EncodeJobConfig) -> EncodePlan:
@@ -644,7 +730,10 @@ def load_or_build_plan_parquet(
     """Parquet-path planner: sample (key, row-size) from a deterministic
     subset of row groups, read IN PARALLEL by pyarrow inside Python
     workers — the full input is never scanned and no raw rows cross the
-    JVM boundary (a DataFrame ``.sample()`` would scan everything)."""
+    JVM boundary (a DataFrame ``.sample()`` would scan everything).  The
+    picked items are broadcast and a range source drives one task per
+    item, the encode stage's own work-distribution shape: one Spark job,
+    no shuffle."""
     plan = _load_plan(cfg.output_dir)
     if plan is not None:
         return plan
@@ -655,13 +744,15 @@ def load_or_build_plan_parquet(
     size_cols = list(cfg.size_cols)
     pick = items[:: max(1, len(items) // 16)][:16]
     per_item = max(64, cfg.sample_rows // len(pick))
+    bpick = spark.sparkContext.broadcast(pick)
 
     def sample_rg(iterator):
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
+        picked = bpick.value
         for batch in iterator:
-            for path, rg in zip(batch.column("path").to_pylist(), batch.column("rg").to_pylist()):
+            for i in batch.column("id").to_pylist():
+                path, rg = picked[i]
                 tbl = _parquet_file(path).read_row_group(
                     max(rg, 0), columns=[key_col] + size_cols, use_threads=False
                 )
@@ -677,8 +768,7 @@ def load_or_build_plan_parquet(
                 yield pa.RecordBatch.from_pydict({"k": k, "sz": sz})
 
     sample = (
-        spark.createDataFrame(pick, "path string, rg int")
-        .repartition(len(pick))
+        spark.range(len(pick), numPartitions=len(pick))
         .mapInArrow(sample_rg, "k string, sz long")
         .toPandas()
     )
@@ -688,39 +778,29 @@ def load_or_build_plan_parquet(
 
 
 def completed_units(spark, output_dir: str) -> np.ndarray:
-    """Units whose lineage rows say 'ok' — skipped on resume.  Returned
-    as a SORTED int64 numpy array fetched over Arrow (``toArrow``): no
-    per-row Python objects on the driver, ~8 B/unit resident (13 MB for
-    the 1.6 M units of a 100 TB / 64 MB dataset), broadcast as-is to the
-    encode tasks for the sorted-searchsorted membership test
+    """Units whose lineage rows say 'ok' — skipped on resume.  Read from
+    the lineage files with pyarrow (no Spark job; ``spark`` is unused)
+    and returned as a SORTED int64 numpy array: no per-row Python
+    objects on the driver, ~8 B/unit resident (13 MB for the 1.6 M units
+    of a 100 TB / 64 MB dataset), broadcast as-is to the encode tasks
+    for the sorted-searchsorted membership test
     (:func:`_resume_keep_mask`)."""
-    lineage_dir = os.path.join(output_dir, "lineage")
-    if not _dir_exists(lineage_dir):
+    lin = _ok_lineage(output_dir, ["unit"])
+    if lin is None:
         return np.array([], dtype=np.int64)
-    tbl = (
-        spark.read.parquet(lineage_dir)
-        .where("status = 'ok'")
-        .select("unit")
-        .distinct()
-        .toArrow()
-    )
-    return np.sort(tbl.column("unit").to_numpy(zero_copy_only=False).astype(np.int64))
+    return np.unique(lin.column("unit").to_numpy().astype(np.int64))
 
 
 def completed_batch_tags(spark, output_dir: str) -> set[str]:
     """Batch tags with committed lineage — a streaming sink checks this
     before encoding so micro-batch replays are no-ops (exactly-once at
-    batch granularity)."""
-    lineage_dir = os.path.join(output_dir, "lineage")
-    if not _dir_exists(lineage_dir):
+    batch granularity).  Read with pyarrow, like :func:`completed_units`
+    (``spark`` is unused; the ``upe_encoded`` stream writer passes
+    None)."""
+    lin = _ok_lineage(output_dir, ["batch_tag"])
+    if lin is None or "batch_tag" not in lin.schema.names:
         return set()
-    ldf = spark.read.parquet(lineage_dir)
-    if "batch_tag" not in ldf.columns:
-        return set()
-    rows = (
-        ldf.where("status = 'ok' AND batch_tag != ''").select("batch_tag").distinct().collect()
-    )
-    return {r.batch_tag for r in rows}
+    return {t for t in lin.column("batch_tag").to_pylist() if t}
 
 
 def _resume_keep_mask(units: np.ndarray, done_local: np.ndarray) -> np.ndarray:
@@ -794,6 +874,26 @@ def _prefetched(iterable, depth: int = 2):
                 q.get_nowait()
             except _queue.Empty:
                 break
+
+
+def _cluster_order(units: np.ndarray, batch, cluster_cols: tuple) -> np.ndarray:
+    """Cluster-mode row order: unit-major, then the cluster columns.  The
+    batch arrives globally sorted by the cluster columns (encode_job's
+    range-repartition + sort pre-pass), so a stable per-unit re-sort on
+    the same keys preserves that order inside every unit slice, and
+    concatenated slices of one unit across batches stay sorted.  pyarrow
+    sort_indices handles every zone-map type (timestamps, decimals,
+    strings) and puts nulls last, which RLE then picks up as one run.
+    The sort table names its columns by position, so no user column
+    name can replace the unit key."""
+    import pyarrow.compute as pc
+
+    cols = [pa.array(units)] + [batch.column(c) for c in cluster_cols]
+    names = [str(i) for i in range(len(cols))]
+    return pc.sort_indices(
+        pa.Table.from_arrays(cols, names=names),
+        sort_keys=[(n, "ascending") for n in names],
+    ).to_numpy()
 
 
 def _encode_stream(
@@ -981,24 +1081,7 @@ def _encode_stream(
             if len(units) == 0:
                 continue
             if cluster_cols:
-                # cluster mode: unit-major, then the cluster columns —
-                # the batch arrives globally sorted by the cluster
-                # columns (encode_job's range-repartition + sort pre-
-                # pass), so a stable per-unit re-sort on the same keys
-                # preserves that order inside every unit slice, and
-                # concatenated slices of one unit across batches stay
-                # sorted.  pyarrow sort_indices handles every zone-map
-                # type (timestamps, decimals, strings) and puts nulls
-                # last, which RLE then picks up as one run.
-                sort_tbl = pa.table(
-                    {"__unit__": pa.array(units)}
-                    | {c: batch.column(c) for c in cluster_cols}
-                )
-                order = pa.compute.sort_indices(
-                    sort_tbl,
-                    sort_keys=[("__unit__", "ascending")]
-                    + [(c, "ascending") for c in cluster_cols],
-                ).to_numpy()
+                order = _cluster_order(units, batch, cluster_cols)
             else:
                 order = np.lexsort((keys, units))
             batch = batch.take(pa.array(order))
@@ -1089,7 +1172,7 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
         )
 
     frags = df.mapInArrow(map_encode, FRAG_SCHEMA)
-    return _finish_encode(spark, frags, plan, done, cfg)
+    return _finish_encode(frags, plan, done, cfg)
 
 
 def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: int = 65536) -> dict:
@@ -1192,77 +1275,122 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
     else:
         work = spark.range(n_map, numPartitions=n_map)
     frags = work.mapInArrow(map_encode_files, FRAG_SCHEMA)
-    return _finish_encode(spark, frags, plan, done, cfg)
+    return _finish_encode(frags, plan, done, cfg)
 
 
-def _finish_encode(spark, frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConfig) -> dict:
-    """Shared tail of the encode job: append MANIFEST rows (tagged with
-    this run's id) — a NARROW stage, and the encoded bytes themselves were
-    already written to payload files by the map tasks, so the JVM never
-    touches them — then derive per-unit lineage from the committed
-    manifest and aggregate metrics.  See the module docstring for why this
-    is crash-safe without unit consolidation."""
-    from pyspark.sql import functions as F
+def _finish_encode(frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConfig) -> dict:
+    """Shared tail of the encode job: run the stage, bring its manifest
+    rows to the driver (``toArrow`` — the stage's only job; the encoded
+    bytes themselves were already written to payload files by the map
+    tasks, so the JVM never touches them), commit them
+    (:func:`_commit_fragments`), and total the committed lineage.  See
+    the module docstring for why this is crash-safe without unit
+    consolidation."""
+    import pyarrow.compute as pc
 
-    n_units = plan.n_units
-    data_dir = manifest_dir(cfg.output_dir)
     t_stage = time.perf_counter()
-    (
-        frags.withColumn("run_id", F.lit(cfg.run_id))
-        .write.mode("append")
-        .parquet(data_dir)
+    rows = frags.toArrow()
+    collect_s = time.perf_counter() - t_stage
+    manifest_s = _commit_fragments(
+        cfg.output_dir, manifest_dir(cfg.output_dir), rows, cfg.run_id, cfg.batch_tag
     )
-    stage_wall = time.perf_counter() - t_stage
 
-    # per-unit lineage from the COMMITTED manifest, this run's rows only;
-    # `native` (codec provenance — C fast path vs NumPy fallback per
-    # worker) aggregates as min(): False if ANY fragment fell back, so a
-    # heterogeneous cluster's mixed-path units are attributable.  Guarded:
-    # manifest dirs predating the column read back without it.
-    sink = spark.read.parquet(data_dir).drop("first_key")
-    aggs = [
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-        F.sum("wall_ms").alias("wall_ms"),
-        F.count("*").alias("n_fragments"),
-        F.first("codecs").alias("codecs"),
-    ]
-    if "native" in sink.columns:
-        aggs.append(F.min("native").alias("native"))
-    new_units = sink.where(F.col("run_id") == cfg.run_id).groupBy("unit").agg(*aggs)
-    lineage = (
-        new_units.withColumn("run_id", F.lit(cfg.run_id))
-        .withColumn("status", F.lit("ok"))
-        .withColumn("batch_tag", F.lit(cfg.batch_tag))
-        .withColumn("committed_at", F.current_timestamp())
-    )
-    lineage.write.mode("append").parquet(os.path.join(cfg.output_dir, "lineage"))
-
-    agg = (
-        spark.read.parquet(os.path.join(cfg.output_dir, "lineage"))
-        .where("status = 'ok'")
-        .agg(
-            F.countDistinct("unit").alias("units"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
+    # totals over every committed unit, across all runs of the dataset
+    lin = _ok_lineage(cfg.output_dir, ["unit", "n_rows", "bytes_in", "bytes_out"])
+    if lin is None:
+        units = n_rows = bytes_in = bytes_out = 0
+    else:
+        units = pc.count_distinct(lin.column("unit")).as_py()
+        n_rows, bytes_in, bytes_out = (
+            pc.sum(lin.column(c)).as_py() or 0 for c in ("n_rows", "bytes_in", "bytes_out")
         )
-        .collect()[0]
-    )
     return {
         "run_id": cfg.run_id,
-        "plan_units": n_units,
+        "plan_units": plan.n_units,
         "resumed_units": int(done.size),
-        "encoded_units": int(agg.units),
-        "rows": int(agg.rows or 0),
-        "bytes_in": int(agg.bytes_in or 0),
-        "bytes_out": int(agg.bytes_out or 0),
-        "ratio": (int(agg.bytes_out or 0) / int(agg.bytes_in)) if agg.bytes_in else None,
-        # wall of the read→assign→encode→sink action alone (excludes
-        # planning and lineage bookkeeping, which are O(1) driver work)
-        "encode_stage_sec": round(stage_wall, 3),
+        "encoded_units": int(units),
+        "rows": int(n_rows),
+        "bytes_in": int(bytes_in),
+        "bytes_out": int(bytes_out),
+        "ratio": (bytes_out / bytes_in) if bytes_in else None,
+        # wall of the read→assign→encode action plus the manifest write
+        # (excludes planning, the lineage file and the totals read)
+        "encode_stage_sec": round(collect_s + manifest_s, 3),
     }
+
+
+def _commit_fragments(
+    output_dir: str, data_dir: str, frags: pa.Table, run_id: str, batch_tag: str = ""
+) -> float:
+    """The one commit path for new fragments (``encode_job``,
+    ``encode_parquet_job`` and the ``upe_encoded`` batch/stream
+    writers): ``frags`` are manifest rows (:data:`FRAG_SCHEMA`) whose
+    payload bytes the tasks already wrote and fsync'd.
+
+    1. ONE manifest file under ``data_dir``: the rows tagged with
+       ``run_id``;
+    2. then ONE lineage file: per-unit totals of the same rows with
+       ``status='ok'`` — the file that makes step 1 visible, because
+       readers semi-join the manifest to lineage on ``(unit, run_id)``.
+
+    Each is a temp-write + rename (:func:`_write_parquet_file`), so a
+    crash between any two steps leaves only payload files or manifest
+    rows that no reader sees, and that vacuum reclaims.  File names are
+    unique per COMMIT, not per run id: a reused config keeps its
+    ``run_id`` across calls, and a second commit must not replace the
+    first one's files.  A commit with no rows writes nothing.  pyarrow
+    only — it also runs in Spark's Python planning worker, which has no
+    SparkSession — so it schedules no Spark job.  Returns the manifest
+    write's wall seconds."""
+    from datetime import datetime, timezone
+
+    n = frags.num_rows
+    if n == 0:
+        return 0.0
+    t0 = time.perf_counter()
+    man = frags.append_column("run_id", pa.array([run_id] * n, pa.string()))
+    man = man.select(_MANIFEST_PA_SCHEMA.names).cast(_MANIFEST_PA_SCHEMA)
+    name = f"part-{run_id}-{uuid.uuid4().hex[:8]}"
+    _write_parquet_file(data_dir, f"{name}-manifest.parquet", man)
+    manifest_s = time.perf_counter() - t0
+
+    # `native` (codec provenance — C fast path vs NumPy fallback per
+    # worker) aggregates as min(): False if ANY fragment of the unit fell
+    # back, so a heterogeneous cluster's mixed-path units are attributable
+    per_unit = man.group_by("unit", use_threads=False).aggregate(
+        [
+            ("n_rows", "sum"),
+            ("bytes_in", "sum"),
+            ("bytes_out", "sum"),
+            ("wall_ms", "sum"),
+            ([], "count_all"),
+            ("codecs", "first"),
+            ("native", "min"),
+        ]
+    )
+    k = per_unit.num_rows
+    now = datetime.now(timezone.utc)
+    lineage = pa.table(
+        [
+            per_unit.column("unit"),
+            per_unit.column("n_rows_sum"),
+            per_unit.column("bytes_in_sum"),
+            per_unit.column("bytes_out_sum"),
+            per_unit.column("wall_ms_sum"),
+            per_unit.column("count_all"),
+            per_unit.column("codecs_first"),
+            pa.array([run_id] * k, pa.string()),
+            pa.array(["ok"] * k, pa.string()),
+            pa.array([batch_tag] * k, pa.string()),
+            pa.array([now] * k, pa.timestamp("us", "UTC")),
+            per_unit.column("native_min"),
+        ],
+        schema=_LINEAGE_PA_SCHEMA,
+    )
+    _write_parquet_file(
+        os.path.join(output_dir, "lineage"), f"{name}-lineage.parquet", lineage
+    )
+    return manifest_s
 
 
 _FILTER_OPS = (

@@ -41,6 +41,7 @@ from .pipeline import (
     _normalize_batch,
     _open_payload,
     _pad_table,
+    _read_meta_table,
     _union_probe_schema,
     date_value_days,
     key_range_from_terms,
@@ -51,20 +52,6 @@ from .pipeline import (
 # ---------------------------------------------------------------------------
 # committed manifest and union schema
 # ---------------------------------------------------------------------------
-
-
-def _read_meta_table(path: str, columns: list[str]) -> pa.Table | None:
-    """A Spark-written parquet directory as one Arrow table (``_SUCCESS``
-    markers ignored by pyarrow.dataset's default ``ignore_prefixes``);
-    None when the directory doesn't exist yet."""
-    import pyarrow.dataset as pads
-
-    try:
-        dset = pads.dataset(path, format="parquet")
-    except (FileNotFoundError, OSError):
-        return None
-    names = [c for c in columns if c in dset.schema.names]
-    return dset.to_table(columns=names)
 
 
 def _meta_state_token(output_dir: str) -> tuple | None:

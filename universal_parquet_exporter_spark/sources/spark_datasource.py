@@ -43,7 +43,9 @@ What Catalyst's v2 pushdown buys here, mechanically:
   (:func:`..encode.pipeline._encode_stream` — codec auto-selection,
   bounded buffering, payload files written straight to storage) and
   return their manifest rows as the task's ``WriterCommitMessage``; only
-  the driver's ``commit()`` appends manifest + lineage.  A failed or
+  the driver's ``commit()`` appends manifest + lineage, through the
+  encode jobs' own commit (:func:`..encode.pipeline._commit_fragments`).
+  A failed or
   speculative task leaves at most an uncommitted payload file — dead
   bytes that ``vacuum`` sweeps — so the sink inherits the engine's
   exactly-once-at-job-granularity story through Spark's OWN commit
@@ -96,11 +98,17 @@ from pyspark.sql.datasource import (
 )
 
 from ..encode.pipeline import (
+    _MANIFEST_PA_SCHEMA,
     _arrow_to_ddl,
+    _column_list,
+    _commit_fragments,
     _ddl_type,
     _encode_stream,
     _load_plan,
     _payload_fs,
+    _read_meta_table,
+    _write_parquet_file,
+    completed_batch_tags,
     manifest_dir,
     next_manifest_name as _next_manifest_name,
     set_manifest_dir,
@@ -112,7 +120,6 @@ from ..encode.scan import (  # noqa: F401  (_chunk_keep: the pruning rule, re-ex
     _committed_manifest,
     _probe_chunk_schema,
     _read_chunk_partition,
-    _read_meta_table,
     plan_scan,
 )
 from ..plans.partitioning import EncodePlan
@@ -435,62 +442,6 @@ class _EncodedStreamReader(DataSourceStreamReader):
 # ---------------------------------------------------------------------------
 
 
-_MANIFEST_PA_SCHEMA = pa.schema(
-    [
-        ("unit", pa.int64()),
-        ("first_key", pa.string()),
-        ("n_rows", pa.int64()),
-        ("row_off", pa.int64()),
-        ("bytes_in", pa.int64()),
-        ("bytes_out", pa.int64()),
-        ("wall_ms", pa.float64()),
-        ("codecs", pa.string()),
-        ("file", pa.string()),
-        ("offset", pa.int64()),
-        ("length", pa.int64()),
-        ("stats", pa.string()),
-        ("native", pa.bool_()),
-        ("run_id", pa.string()),
-    ]
-)
-
-_LINEAGE_PA_SCHEMA = pa.schema(
-    [
-        ("unit", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("bytes_in", pa.int64()),
-        ("bytes_out", pa.int64()),
-        ("wall_ms", pa.float64()),
-        ("n_fragments", pa.int64()),
-        ("codecs", pa.string()),
-        ("run_id", pa.string()),
-        ("status", pa.string()),
-        ("batch_tag", pa.string()),
-        ("committed_at", pa.timestamp("us", "UTC")),
-        ("native", pa.bool_()),
-    ]
-)
-
-
-def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
-    """One parquet file into a metadata directory, atomically (temp name
-    prefixed ``.`` — invisible to Spark/pyarrow listings — then rename)."""
-    import pyarrow.parquet as pq
-
-    fs, root = _payload_fs(dir_path)
-    if fs is None:
-        os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, f".tmp-{name}")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(root, name))
-    else:
-        fs.create_dir(root, recursive=True)
-        tmp = f"{root}/.tmp-{name}"
-        with fs.open_output_stream(tmp) as out:
-            pq.write_table(tbl, out)
-        fs.move(tmp, f"{root}/{name}")
-
-
 class _FragMessage(WriterCommitMessage):
     """One task's manifest rows (fragment bookkeeping, ~100 B/row — the
     payload bytes themselves went straight to storage)."""
@@ -560,8 +511,7 @@ class _EncodedWriterBase:
         # unit slice instead of re-sorting by key — chunk zone maps on
         # the cluster columns stay narrow either way (they follow the
         # flush wave), this preserves the RLE/FOR run structure too.
-        cb = options.get("cluster_by", "")
-        self.cluster_cols = tuple(c for c in cb.split(",") if c)
+        self.cluster_cols = _column_list(options.get("cluster_by", ""))
         missing = [c for c in self.cluster_cols if c not in schema_names]
         if missing:
             raise ValueError(f"cluster_by columns not in the written schema: {missing}")
@@ -586,48 +536,10 @@ class _EncodedWriterBase:
 
     # -- commit side (Spark's Python planning worker: pyarrow only) -----
     def _commit_rows(self, rows: list[dict], data_dir: str, run_id: str, batch_tag: str = "") -> None:
-        """The engine's two-step commit, from pre-collected manifest rows:
-        append ONE manifest parquet file (tagged with this commit's run
-        id), then the lineage file that makes its rows visible — derived
-        here from the same in-hand rows (``_finish_encode`` re-reads the
-        manifest because its rows never leave the cluster; a commit
-        message's rows are already local).  Spark's commit hook runs in
-        the Python planning worker where no SparkSession exists, so both
-        files are written with pyarrow — plain int64/double/utf8/µs-UTC
-        columns that Spark reads interchangeably with its own files —
-        via the temp-write + rename idiom (a concurrent reader never
-        sees a torn footer)."""
-        from datetime import datetime, timezone
-
-        tagged = [{**r, "run_id": run_id} for r in rows]
-        man_tbl = pa.Table.from_pylist(tagged, schema=_MANIFEST_PA_SCHEMA)
-        _write_parquet_file(data_dir, f"part-ds-{run_id}-manifest.parquet", man_tbl)
-
-        per_unit: dict[int, dict] = {}
-        for r in rows:
-            u = per_unit.setdefault(
-                r["unit"],
-                {"unit": r["unit"], "n_rows": 0, "bytes_in": 0, "bytes_out": 0,
-                 "wall_ms": 0.0, "n_fragments": 0, "codecs": r["codecs"],
-                 "native": True},
-            )
-            u["n_rows"] += r["n_rows"]
-            u["bytes_in"] += r["bytes_in"]
-            u["bytes_out"] += r["bytes_out"]
-            u["wall_ms"] += r["wall_ms"]
-            u["n_fragments"] += 1
-            # provenance: min() semantics — False if ANY fragment of the
-            # unit came off the pure-NumPy fallback path
-            u["native"] = u["native"] and bool(r.get("native", False))
-        now = datetime.now(timezone.utc)
-        lin_rows = [
-            {**u, "run_id": run_id, "status": "ok", "batch_tag": batch_tag, "committed_at": now}
-            for u in per_unit.values()
-        ]
-        lin_tbl = pa.Table.from_pylist(lin_rows, schema=_LINEAGE_PA_SCHEMA)
-        _write_parquet_file(
-            os.path.join(self.path, "lineage"), f"part-ds-{run_id}-lineage.parquet", lin_tbl
-        )
+        """Commit the tasks' manifest rows, which the commit messages
+        already carried to this Python planning worker, through the
+        encode job's own commit (:func:`_commit_fragments`)."""
+        _commit_fragments(self.path, data_dir, pa.Table.from_pylist(rows), run_id, batch_tag)
 
     def _drop_payload(self, messages) -> None:
         """Best-effort removal of aborted/duplicate tasks' payload files;
@@ -667,6 +579,14 @@ class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
         rows = [r for m in messages if m is not None for r in m.rows]
         self._commit_rows(rows, self.data_dir, self.run_id)
         if self.overwrite:
+            if not rows:
+                # an empty commit writes no file, but the pointer must
+                # name a manifest that Spark-side readers (compact,
+                # vacuum) can open: publish an empty one
+                _write_parquet_file(
+                    self.data_dir, f"part-{self.run_id}-manifest.parquet",
+                    _MANIFEST_PA_SCHEMA.empty_table(),
+                )
             # atomic publish: readers resolve the old manifest until this
             # rename-backed pointer lands; superseded payload/manifest
             # bytes age out under vacuum's horizon
@@ -709,19 +629,9 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
     def _tag(self, batch_id: int) -> str:
         return f"ds_epoch_{self._query_token}_{batch_id}"
 
-    def _committed_tags(self) -> set[str]:
-        lin = _read_meta_table(os.path.join(self.path, "lineage"), ["batch_tag", "status"])
-        if lin is None:
-            return set()
-        return {
-            t
-            for t, s in zip(lin.column("batch_tag").to_pylist(), lin.column("status").to_pylist())
-            if t and s == "ok"
-        }
-
     def commit(self, messages, batchId: int):
         tag = self._tag(batchId)
-        if tag in self._committed_tags():
+        if tag in completed_batch_tags(None, self.path):
             # replayed epoch (sink committed, checkpoint didn't): the
             # rerun's payload files are duplicates — drop, don't commit
             self._drop_payload(messages)

@@ -78,6 +78,13 @@ def read_jdbc(
     ``options``."""
     if (query is None) == (table is None):
         raise ValueError("exactly one of query= or table= is required")
+    if query is not None and partition_column is not None:
+        # Spark's JDBC source rejects `query` together with
+        # `partitionColumn` at load time; fail before building the reader
+        raise ValueError(
+            "partition_column cannot be combined with query=; pass the query "
+            "as a subquery via table='(<query>) AS q' instead"
+        )
     reader = spark.read.format("jdbc").option("url", url).option("fetchsize", str(fetchsize))
     reader = reader.option("query", query) if query is not None else reader.option("dbtable", table)
     for k, v in (
