@@ -139,6 +139,29 @@ def test_compact_requires_plan(spark, tmp_path):
         compact(spark, str(tmp_path / "nope"))
 
 
+def test_compact_after_empty_first_encode(spark, tmp_path):
+    """An empty first encode leaves only plan.json: nothing is committed,
+    so compaction has nothing to do."""
+    out = str(tmp_path / "empty_first")
+    encode_job(
+        spark,
+        _docs(spark).limit(0),
+        EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)),
+    )
+    assert os.listdir(out) == ["plan.json"]
+    assert compact(spark, out) == {
+        "units_total": 0,
+        "units_compacted": 0,
+        "slices_before": 0,
+        "slices_after": 0,
+        "bytes_before": 0,
+        "bytes_after": 0,
+        "manifest_rewritten": False,
+        "dry_run": False,
+    }
+    assert os.listdir(out) == ["plan.json"]
+
+
 def test_compact_evolved_dataset_preserves_union(spark, tmp_path):
     """Schema evolution × compaction: a fragmented unit holding chunks
     from TWO generations (one with ``source``, one with ``score``)

@@ -1,9 +1,9 @@
 """The encode commit (``pipeline._commit_fragments``): one manifest file,
 then one lineage file, written with pyarrow on the driver.
 
-- An encode into a fresh directory schedules only the plan sample and
-  the encode stage as Spark jobs; a resumed call with the same config
-  finds every unit done and writes nothing.
+- An encode into a fresh directory schedules one Spark job, the encode
+  stage (the plan sample is read on the driver); a resumed call with the
+  same config finds every unit done and writes nothing.
 - A crash between the manifest file and the lineage file leaves the
   dataset in its pre-state; a rerun re-encodes the torn units and vacuum
   reclaims what the torn run left behind."""
@@ -113,6 +113,15 @@ def test_encode_parquet_job_commits_without_bookkeeping_jobs(spark, webpages_par
     for k in ("encoded_units", "rows", "bytes_in", "bytes_out", "ratio"):
         assert m2[k] == m1[k], k
     assert (_files(data_dir), _files(lineage_dir)) == before
+
+
+def test_fresh_encode_parquet_job_runs_one_spark_job(spark, webpages_parquet, outdir):
+    cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=2 << 20)
+    m, jobs = _jobs_of(spark, "upes-commit-one-job", lambda: encode_parquet_job(spark, webpages_parquet, cfg))
+    # the encode stage; the plan sample is read by pyarrow on the driver
+    assert len(jobs) == 1, jobs
+    assert os.path.exists(os.path.join(outdir, "plan.json"))
+    assert m["rows"] == N_ROWS and m["encoded_units"] == m["plan_units"]
 
 
 def _units_below(df, plan: EncodePlan, k: int):

@@ -311,3 +311,32 @@ def test_vacuum_heals_interrupted_swap(spark, webpages, outdir):
     assert not os.path.exists(data_dir + ".vacuum_tmp")
     assert rep["orphan_manifest_rows"] == 0
     assert decode_dataset(spark, outdir).count() == N_ROWS
+
+
+def test_vacuum_after_empty_first_encode(spark, webpages, outdir):
+    """An empty first encode commits no manifest or lineage file; payload
+    files a torn first run left behind are still swept under the
+    horizon."""
+    encode_job(spark, webpages.limit(0), EncodeJobConfig(output_dir=outdir))
+    assert os.listdir(outdir) == ["plan.json"]
+    pdir = os.path.join(outdir, "payload")
+    os.makedirs(pdir)
+    for name in ("frag-torn-old.bin", "frag-torn-young.bin"):
+        with open(os.path.join(pdir, name), "wb") as f:
+            f.write(b"\x00" * 1024)
+    old = time.time() - 7200
+    os.utime(os.path.join(pdir, "frag-torn-old.bin"), (old, old))
+
+    rep = vacuum(spark, outdir, older_than_sec=3600)
+    assert rep == {
+        "payload_files": 2,
+        "live_files": 0,
+        "deleted_files": 1,
+        "reclaimed_bytes": 1024,
+        "orphan_manifest_rows": 0,
+        "manifest_rewritten": False,
+        "retired_manifest_dirs": 0,
+        "stale_plan_tmp": 0,
+        "dry_run": False,
+    }
+    assert os.listdir(pdir) == ["frag-torn-young.bin"]

@@ -48,6 +48,7 @@ import uuid
 import numpy as np
 
 from .container import deserialize_chunk
+from .maintenance import _has_meta_files
 from .pipeline import (
     FRAG_SCHEMA,
     _encode_stream,
@@ -94,6 +95,20 @@ def compact(
     data_dir = manifest_dir(output_dir)
     lineage_dir = os.path.join(output_dir, "lineage")
     payload_dir = os.path.join(output_dir, "payload")
+    report = {
+        "units_total": 0,
+        "units_compacted": 0,
+        "slices_before": 0,
+        "slices_after": 0,
+        "bytes_before": 0,
+        "bytes_after": 0,
+        "manifest_rewritten": False,
+        "dry_run": dry_run,
+    }
+    if not (_has_meta_files(data_dir) and _has_meta_files(lineage_dir)):
+        # an empty first encode commits no manifest or lineage file:
+        # nothing is committed yet, so nothing is fragmented
+        return report
 
     manifest = spark.read.parquet(data_dir)
     committed = (
@@ -118,16 +133,12 @@ def compact(
         F.sum(F.when(frag_cond, F.col("bytes_out"))).alias("bytes_before"),
     ).collect()[0]
     n_targets = int(ev.units_compacted or 0)
-    report = {
-        "units_total": int(ev.units_total or 0),
-        "units_compacted": n_targets,
-        "slices_before": int(ev.slices_before or 0),
-        "slices_after": 0,
-        "bytes_before": int(ev.bytes_before or 0),
-        "bytes_after": 0,
-        "manifest_rewritten": False,
-        "dry_run": dry_run,
-    }
+    report.update(
+        units_total=int(ev.units_total or 0),
+        units_compacted=n_targets,
+        slices_before=int(ev.slices_before or 0),
+        bytes_before=int(ev.bytes_before or 0),
+    )
     if cluster_by:
         # validate against the DATASET's union schema (meta-only probes
         # over committed rows) before any early return, so a typo'd

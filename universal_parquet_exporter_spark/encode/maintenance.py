@@ -38,7 +38,13 @@ from __future__ import annotations
 import os
 import time
 
-from .pipeline import _payload_fs, manifest_dir, next_manifest_name, set_manifest_dir
+from .pipeline import (
+    FRAG_SCHEMA,
+    _payload_fs,
+    manifest_dir,
+    next_manifest_name,
+    set_manifest_dir,
+)
 
 
 def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
@@ -68,6 +74,21 @@ def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
                 mtime = info.mtime.timestamp() if info.mtime is not None else float("inf")
                 out.append((info.base_name, info.size, mtime))
     return out
+
+
+def _has_meta_files(meta_dir: str) -> bool:
+    """Whether a manifest or lineage directory holds a file Spark reads
+    (names starting with ``.`` or ``_`` are temp files and markers).  An
+    empty first encode commits neither, so both may be missing."""
+    return any(not n.startswith((".", "_")) for n, _s, _m in _list_payload_files(meta_dir))
+
+
+def _read_meta_or_empty(spark, meta_dir: str, ddl: str):
+    """``spark.read.parquet(meta_dir)``, or an empty frame of ``ddl``
+    before the first commit wrote a file there."""
+    if _has_meta_files(meta_dir):
+        return spark.read.parquet(meta_dir)
+    return spark.createDataFrame([], ddl)
 
 
 def _delete_files(payload_dir: str, names: list[str], spark=None) -> None:
@@ -286,14 +307,16 @@ def vacuum(
     )
 
     committed = (
-        spark.read.parquet(lineage_dir).where("status = 'ok'").select("unit", "run_id")
+        _read_meta_or_empty(spark, lineage_dir, "unit long, run_id string, status string")
+        .where("status = 'ok'")
+        .select("unit", "run_id")
     )
     # per-part-file mtimes give orphan rows their age (each manifest
     # append writes fresh part files, so file mtime ≈ that run's commit
     # time); rows in young part files are NEVER treated as orphans
     part_mtimes = {name: m for name, _sz, m in _list_payload_files(data_dir)}
     old_parts = {n for n, m in part_mtimes.items() if (now - m) >= older_than_sec}
-    manifest = spark.read.parquet(data_dir).withColumn(
+    manifest = _read_meta_or_empty(spark, data_dir, FRAG_SCHEMA + ", run_id string").withColumn(
         "__part", F.element_at(F.split(F.input_file_name(), "/"), -1)
     )
     base_cols = [c for c in manifest.columns if c != "__part"]

@@ -43,6 +43,7 @@ Scale notes (100 TB / 1000-executor thinking):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -725,53 +726,54 @@ def _expand_row_groups(pf, rg: int):
 
 
 def load_or_build_plan_parquet(
-    spark, items: list[tuple[str, int]], total_rows: int, cfg: EncodeJobConfig
+    items: list[tuple[str, int]], total_rows: int, cfg: EncodeJobConfig
 ) -> EncodePlan:
     """Parquet-path planner: sample (key, row-size) from a deterministic
-    subset of row groups, read IN PARALLEL by pyarrow inside Python
-    workers — the full input is never scanned and no raw rows cross the
-    JVM boundary (a DataFrame ``.sample()`` would scan everything).  The
-    picked items are broadcast and a range source drives one task per
-    item, the encode stage's own work-distribution shape: one Spark job,
-    no shuffle."""
+    subset of at most 16 row groups, read by pyarrow on the driver — no
+    Spark job, and the full input is never scanned (a DataFrame
+    ``.sample()`` would scan everything).  The picked row groups are
+    read by a small thread pool (pyarrow releases the GIL), and each is
+    cut to its strided ``(k, sz)`` rows as soon as it is read, so the
+    driver holds at most one row group's key + size columns per thread.
+
+    The row size is the summed byte length of the ``cfg.size_cols``
+    present in the first picked file, or a constant 8 bytes when none
+    is — the proxy :func:`load_or_build_plan` uses."""
     plan = _load_plan(cfg.output_dir)
     if plan is not None:
         return plan
 
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.compute as pc
+
     from ..plans.partitioning import plan_from_sample
 
     key_col = cfg.key_col
-    size_cols = list(cfg.size_cols)
     pick = items[:: max(1, len(items) // 16)][:16]
     per_item = max(64, cfg.sample_rows // len(pick))
-    bpick = spark.sparkContext.broadcast(pick)
+    with _parquet_file(pick[0][0]) as pf:
+        present = pf.schema_arrow.names
+    size_cols = [c for c in cfg.size_cols if c in present]
 
-    def sample_rg(iterator):
-        import pyarrow.compute as pc
+    def sample_rg(item):
+        path, rg = item
+        with _parquet_file(path) as pf:
+            tbl = pf.read_row_group(max(rg, 0), columns=[key_col] + size_cols, use_threads=False)
+        stride = max(1, tbl.num_rows // per_item)
+        tbl = tbl.take(np.arange(0, tbl.num_rows, stride))
+        lens = [
+            pc.coalesce(pc.binary_length(tbl.column(c)), pa.scalar(0)).cast("int64")
+            for c in size_cols
+        ]
+        if lens:
+            sz = functools.reduce(pc.add, lens)
+        else:
+            sz = pa.repeat(pa.scalar(8, pa.int64()), tbl.num_rows)
+        return pa.table({"k": tbl.column(key_col).cast(pa.string()), "sz": sz})
 
-        picked = bpick.value
-        for batch in iterator:
-            for i in batch.column("id").to_pylist():
-                path, rg = picked[i]
-                tbl = _parquet_file(path).read_row_group(
-                    max(rg, 0), columns=[key_col] + size_cols, use_threads=False
-                )
-                stride = max(1, tbl.num_rows // per_item)
-                tbl = tbl.take(pa.array(range(0, tbl.num_rows, stride)))
-                sz = None
-                for c in size_cols:
-                    ln = pc.coalesce(pc.binary_length(tbl.column(c)), pa.scalar(0)).cast("int64")
-                    sz = ln if sz is None else pc.add(sz, ln)
-                k = tbl.column(key_col).cast(pa.string()).combine_chunks()
-                if isinstance(sz, pa.ChunkedArray):
-                    sz = sz.combine_chunks()
-                yield pa.RecordBatch.from_pydict({"k": k, "sz": sz})
-
-    sample = (
-        spark.range(len(pick), numPartitions=len(pick))
-        .mapInArrow(sample_rg, "k string, sz long")
-        .toPandas()
-    )
+    with ThreadPoolExecutor(min(len(pick), 8)) as pool:
+        sample = pa.concat_tables(pool.map(sample_rg, pick)).to_pandas()
     plan = plan_from_sample(sample, total_rows, key_col, cfg.target_unit_bytes)
     _persist_plan(plan, cfg.output_dir)
     return plan
@@ -1181,12 +1183,15 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
 
     The work-list is (file, row-group) pairs — at nominal (Iceberg) scale
     this list comes from the table's manifests; here it is built from file
-    footers on the driver.  Each task opens its row groups with the Arrow
+    footers on the driver.  The plan is sampled from a few of those row
+    groups by pyarrow on the driver (:func:`load_or_build_plan_parquet`)
+    and the commit is written by pyarrow too, so the encode stage is the
+    call's only Spark job.  Each task opens its row groups with the Arrow
     C++ parquet reader, so raw rows NEVER cross the JVM<->Python boundary:
-    the only Arrow-IPC traffic is the encoded fragments (~5x smaller).
-    This is the scan topology a 1000-executor job wants — column chunks
-    stream from storage straight into the encode kernels — and it is what
-    `bench.py` measures.
+    the tasks write encoded payload files themselves and only manifest
+    rows come back.  This is the scan topology a 1000-executor job wants
+    — column chunks stream from storage straight into the encode kernels
+    — and it is what `bench.py` measures.
 
     With ``cfg.input_format == "iceberg"``, ``input_dir`` is a catalog
     table name and the work-list comes from the table's manifests
@@ -1197,7 +1202,7 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
         items, total_rows = _parquet_work_items(input_dir)
     if not items:
         raise ValueError(f"no parquet input in {input_dir}")
-    plan = load_or_build_plan_parquet(spark, items, total_rows, cfg)
+    plan = load_or_build_plan_parquet(items, total_rows, cfg)
     done = (
         completed_units(spark, cfg.output_dir)
         if cfg.skip_completed
